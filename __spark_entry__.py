@@ -32,7 +32,7 @@ from predicate_finder_spark.functions.hashing import (
     word_shingles,
 )
 from predicate_finder_spark.operators.ann import brute_force_topk, build_ivf_cells, ivf_topk
-from predicate_finder_spark.operators.joins import salted_join
+from predicate_finder_spark.operators.joins import salted_join, spread_by
 
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "was", "that", "it")
 
@@ -46,41 +46,6 @@ def _tokens(col):
     this on the punctuation-free documents corpus; the oracle mirrors it
     with list_filter(string_split(...))."""
     return F.filter(F.split(col, " "), lambda x: x != F.lit(""))
-
-
-
-
-def _scan_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of a frame (file size for a bare parquet
-    scan).  Guards the spread helpers: repartitioning a few hundred KB to
-    32 tasks costs more scheduling than it buys (measured: q12 at sf0.01
-    0.34 s -> 0.74 s without the guard), while the multi-MB sf1.0 tables
-    gain 2-3x."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 1 << 62  # unknown -> do not block the spread
-
-
-def _spread_by(df: DataFrame, *keys: str) -> DataFrame:
-    """Hash-repartition on ``keys`` at full core width when the scan plans
-    fewer tasks than cores (the local sf tables are single parquet files
-    with ONE row group, so a scan — however many cores the box has — runs
-    one task, and every map-heavy stage fused into it is serialized).
-
-    Keyed on a downstream window/aggregation key, this replaces the
-    operator's own exchange (ClusteredDistribution is satisfied by any
-    hash partitioning on the keys) rather than adding one; keyed on a
-    unique row key it is a plain scan spread.  Either way hash repartition
-    pays no sort-before-repartition (that cost is round-robin-only, which
-    is why the round-robin _spread variant was retired — measured: q19 at
-    sf0.1 0.37 s -> 1.4 s under round-robin's local sort) and row-to-
-    partition assignment is deterministic under task retry (guide §2.5).
-    At cluster scale the scan has >= cores splits and this is a no-op."""
-    sc = df.sparkSession.sparkContext
-    if _scan_bytes(df) > 4 * 1024 * 1024 and df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism, *[F.col(k) for k in keys])
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -237,7 +202,7 @@ def q12_idf(spark, sf):
     # (doc_id, word) globally unique and the explode can feed the word
     # aggregation DIRECTLY — one exchange (partial word counts) instead of
     # two (the old (doc_id, word) distinct shuffled every pair first).
-    d = _spread_by(_t(spark, sf, "documents"), "doc_id")
+    d = spread_by(_t(spark, sf, "documents"), "doc_id")
     n = d.agg(F.countDistinct("doc_id").alias("__n"))
     words = d.select(F.explode(F.array_distinct(_tokens(F.col("text")))).alias("word"))
     return (
@@ -313,9 +278,9 @@ def q19_distinct_count(spark, sf):
     # partial dedup complete (all copies of a pair land together).
     # Measured at 6M simulated rows: 2.51 s plain / 2.12 s spread-by-both-
     # keys / 1.79 s this shape.  No-op at cluster scale (guard in
-    # _spread_by).
+    # spread_by).
     return (
-        _spread_by(_t(spark, sf, "lineitem"), "l_partkey")
+        spread_by(_t(spark, sf, "lineitem"), "l_partkey")
         .groupBy("l_returnflag")
         .agg(
             F.countDistinct("l_partkey").alias("n_parts"),
@@ -327,7 +292,7 @@ def q19_distinct_count(spark, sf):
 def q20_top1_window(spark, sf):
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
     return (
-        _spread_by(
+        spread_by(
             _t(spark, sf, "orders").select("o_custkey", "o_orderkey", "o_totalprice"),
             "o_custkey",
         )
@@ -357,7 +322,7 @@ def q22_running_sum(spark, sf):
     # partitions, serializing the per-user sort) with a pinned core-width
     # partitioning — same mechanism as q20, no-op at cluster scale.
     return (
-        _spread_by(_t(spark, sf, "events"), "user_id")
+        spread_by(_t(spark, sf, "events"), "user_id")
         .withColumn("running", F.round(F.sum("value").over(w), 4))
         .select("user_id", "event_id", "running")
     )

@@ -37,7 +37,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--out", required=True, help="output root (triples/, vertices/, edges/)")
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--no-resume", action="store_true")
-    p.add_argument("--salt-buckets", type=int, default=8)
+    p.add_argument("--salt-buckets", type=int, default=0,
+                   help="N > 1 salts the KG candidate join over N buckets "
+                        "(for head-entity skew); 0 = unsalted")
     p.add_argument("--lsh", action="store_true", help="LSH-blocked fuzzy linking")
     p.add_argument("--salience", action="store_true",
                    help="annotate vertices with PageRank entity salience")

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -28,9 +28,6 @@ class PipelineConfig:
     min_link_prior: float = 0.0
     max_mention_ngram: int = 3
     use_lsh_blocking: bool = False
-    lsh_shingle_size: int = 3
-    lsh_num_hashes: int = 16
-    lsh_bands: int = 4
     # candidate predicates
     predicate_blacklist: tuple[str, ...] = (
         "#", "subject", "wiki", "hypernym", "gender",
@@ -52,12 +49,11 @@ class PipelineConfig:
     idf_min_df: int = 1
     max_vocab: int | None = None
     # skew handling: AQE's runtime skew-join split is the always-on
-    # backstop; explicit salting (2.25x on the Zipf skew bench,
-    # BENCH/skew.py) is opt-in for known-pathological head keys because it
-    # multiplies the build-side shuffle by salt_buckets — on a
-    # well-distributed corpus that is pure overhead on the hot KG join
-    salt_buckets: int = 8
-    salted_join: bool = False
+    # backstop; salt_buckets > 1 salts the KG candidate join (2.25x on the
+    # Zipf skew bench, BENCH/skew.py).  Opt-in for known-pathological head
+    # keys because it multiplies the build-side shuffle by salt_buckets —
+    # on a well-distributed corpus that is pure overhead on the hot KG join
+    salt_buckets: int = 0
     # language filter (reference DataExtract.py:76: FILTER(lang(?label)='en'))
     languages: tuple[str, ...] = ("en",)
     # crawl-snapshot dedup pre-step (weblinks.latest_snapshot): keep only
@@ -69,12 +65,10 @@ class PipelineConfig:
     # orchestration
     checkpoint_dir: str | None = None
     resume: bool = True
-    extra: dict = field(default_factory=dict, compare=False, hash=False)
 
     def config_hash(self) -> str:
         """Stable content hash for stage-manifest resume checks."""
         d = asdict(self)
-        d.pop("extra", None)
         d.pop("checkpoint_dir", None)
         d.pop("resume", None)
         blob = json.dumps(d, sort_keys=True, default=str).encode()

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from predicate_finder_spark.functions.similarity import cosine_expr
+from predicate_finder_spark.operators.joins import spread_by
 
 
 def brute_force_topk(
@@ -62,18 +63,10 @@ def brute_force_topk(
         norm_expr(F.col(vec_col)).alias("__qn"),
     )
     # a single-file parquet scan plans one task regardless of cores; the
-    # per-row cosine work would then run serially.  Spread BEFORE the norm
-    # projection, and only when the scan's parallelism is below the session
-    # default — at real scale inputs carry enough splits and this is a
-    # no-op, so no corpus shuffle is added.
-    corpus = vectors.select(F.col(id_col), F.col(vec_col))
-    default_par = vectors.sparkSession.sparkContext.defaultParallelism
-    if corpus.rdd.getNumPartitions() < default_par:
-        # hash on the unique id, not round-robin: round-robin pays a local
-        # sort of its input (sortBeforeRepartition) serialized inside the
-        # under-parallel scan task — exactly what the spread is avoiding —
-        # and hash assignment is deterministic under task retry
-        corpus = corpus.repartition(default_par, F.col(id_col))
+    # per-row cosine work would then run serially.  Spread on the unique id
+    # BEFORE the norm projection; spread_by is a no-op at real scale, where
+    # inputs carry enough splits, so no corpus shuffle is added there.
+    corpus = spread_by(vectors.select(F.col(id_col), F.col(vec_col)), id_col)
     corpus = corpus.select(
         F.col(id_col), F.col(vec_col), norm_expr(F.col(vec_col)).alias("__vn")
     )

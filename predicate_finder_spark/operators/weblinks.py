@@ -64,9 +64,10 @@ def outlink_edges(
     # in the same select as the explode, ExtractGenerator computes it in
     # the Project ABOVE the Generate.  That placement is deliberate — a
     # per-page hoist (own select below the generator's) was tried and
-    # measured 3.4x SLOWER at 200k pages (host_graph 6.7 s -> 22.8 s):
-    # the explode drops link-less pages, so edge rows are FEWER than page
-    # rows on this corpus and per-edge evaluation does less total work.
+    # measured 3.4x SLOWER at 200k pages (host_graph 6.7 s -> 22.8 s).
+    # Why is not yet verified: every synthetic page carries at least two
+    # <a href> links, so edge rows outnumber page rows and a row count
+    # does not explain it.
     src = canonicalize_url(F.col(url_col)) if canonicalize else F.col(url_col)
     dst = F.explode(F.array_distinct(extract_outlinks(F.col(html_col))))
     edges = pages.select(src.alias("src"), dst.alias("__dst"))
@@ -101,8 +102,8 @@ def anchor_texts(
     # src canonicalization runs per exploded <a> element (ExtractGenerator
     # keeps it in the Project above the Generate).  Deliberate: a per-page
     # hoist below the generator was tried and measured ~1.8x slower at
-    # 200k pages (1.43 s -> 2.60 s) — the explode drops pages without <a>
-    # elements, so element rows are fewer than page rows on this corpus.
+    # 200k pages (1.43 s -> 2.60 s); the cause is not yet verified (every
+    # synthetic page has <a> elements, so it is not a smaller row count).
     src = canonicalize_url(F.col(url_col)) if canonicalize else F.col(url_col)
     exploded = pages.select(src.alias("src"), el)
     dst = F.regexp_extract("__el", _HREF_PATTERN, 1)

@@ -46,7 +46,11 @@ from pyspark.sql import functions as F
 
 from predicate_finder_spark.config import PipelineConfig
 from predicate_finder_spark.plans.pipeline import extract_triples
-from predicate_finder_spark.sources.tables import read_manifest, write_stage
+from predicate_finder_spark.sources.tables import (
+    read_manifest,
+    write_json_atomic,
+    write_stage,
+)
 
 _BATCH_MARKER = "_batch.json"
 
@@ -226,10 +230,7 @@ def extract_triples_incremental(
             "rows"
         ),
     }
-    tmp = os.path.join(batch_dir, _BATCH_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(marker, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(batch_dir, _BATCH_MARKER))
+    write_json_atomic(os.path.join(batch_dir, _BATCH_MARKER), marker)
 
     cum, _ = incremental_state(spark, state_dir)
     return cum
@@ -288,10 +289,7 @@ def compact_batches(
         "replaces": names,
         "triples_rows": (read_manifest(os.path.join(batch_dir, "triples")) or {}).get("rows"),
     }
-    tmp = os.path.join(batch_dir, _BATCH_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(marker, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(batch_dir, _BATCH_MARKER))
+    write_json_atomic(os.path.join(batch_dir, _BATCH_MARKER), marker)
     if remove_old:
         import shutil
 

@@ -10,9 +10,10 @@ Physical shape at scale (what .explain should show):
   scan pages [lang filter + column pruning pushed to parquet]
   -> pandas UDF extract (narrow)
   -> explode sentences/mentions (narrow)
-  -> BroadcastHashJoin aliases (or salted SMJ when dictionary is huge)
+  -> BroadcastHashJoin aliases
   -> windows over (url, sent_id) [one shuffle on url-ish keys]
-  -> join kg_triples on (s, o) [salted against head-entity skew + AQE]
+  -> join kg_triples on (s, o) [broadcast under a size cap, else shuffled;
+     cfg.salt_buckets > 1 salts it against head-entity skew; AQE skew join]
   -> pandas UDF scorer (narrow)
   -> row_number top-1 window (reuses the (url, sent_id) clustering)
   -> triples sink
@@ -172,12 +173,7 @@ def extract_triples(
                 aliases.filter(F.col("prior") >= cfg.min_link_prior)
                 if cfg.min_link_prior > 0.0 else aliases
             )
-            linked = lsh_blocked_candidates(
-                mentions, dic,
-                shingle_size=cfg.lsh_shingle_size,
-                num_hashes=cfg.lsh_num_hashes,
-                bands=cfg.lsh_bands,
-            )
+            linked = lsh_blocked_candidates(mentions, dic)
         else:
             linked = link_mentions(
                 mentions, aliases, min_prior=cfg.min_link_prior,
@@ -192,7 +188,7 @@ def extract_triples(
         cands = candidate_predicates(
             pairs, kg_triples,
             blacklist=cfg.predicate_blacklist,
-            salt_buckets=cfg.salt_buckets if cfg.salted_join else 0,
+            salt_buckets=cfg.salt_buckets,
             kg_prededuped=cfg.kg_prededuped,
         )
         return predicate_words(enrich_ontology(cands, ontology))

@@ -66,15 +66,9 @@ def get_spark(
         # (__sid, __oid) / block keys then skip both sides' sorts.  The
         # per-partition build is bounded by the shuffle partition sizing
         # (AQE advisory size), and AQE's skew-join split stays on as the
-        # OOM backstop.  SPARK_GRAFT_PREFER_SMJ=1 restores sort-merge.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1" else "false",
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "256m"),
-        )
+        # OOM backstop.  extra_conf can override either setting.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
         # Arrow transfer for every pandas UDF / toPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bigger Arrow batches amortize per-batch UDF overhead and feed the
@@ -83,15 +77,23 @@ def get_spark(
         # Deterministic timestamps; DuckDB compares in UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # local mode = driver-only: give the single JVM most of the box
+        # local mode = driver-only: the single JVM gets the heap
         # (cluster deployments size executors instead)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 64g.  A fixed 64g heap on a
+    smaller swapless host lets G1 grow the JVM until the kernel OOM-kills
+    it; half leaves room for the Python workers and the page cache."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2 >> 20, 64 << 10)}m"
 
 
 def _parse_local_threads(master: str) -> int:

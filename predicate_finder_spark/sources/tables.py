@@ -43,15 +43,14 @@ def read_manifest(path: str) -> dict | None:
         return None
 
 
-def _write_manifest_atomic(path: str, manifest: dict) -> None:
-    """All manifest writes go through tmp + os.replace so a crash mid-write
-    can never leave a truncated _manifest.json (which would permanently
-    break resume for the stage)."""
-    mp = manifest_path(path)
-    tmp = mp + ".tmp"
+def write_json_atomic(file_path: str, obj: dict) -> None:
+    """Commit a JSON file through tmp + os.replace, so a crash mid-write can
+    never leave a truncated manifest or batch marker (a torn
+    _manifest.json would permanently break resume for its stage)."""
+    tmp = file_path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, mp)
+        json.dump(obj, f, indent=2, sort_keys=True)
+    os.replace(tmp, file_path)
 
 
 def stage_complete(
@@ -239,18 +238,5 @@ def checkpoint_stage(
     m = read_manifest(path)
     if m is not None:
         m["metrics"]["write_sec"] = round(time.time() - t0, 3)
-        _write_manifest_atomic(path, m)
+        write_json_atomic(manifest_path(path), m)
     return read_stage(spark, path)
-
-
-# ---------------------------------------------------------------------------
-# driver testdata convenience loaders
-# ---------------------------------------------------------------------------
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
-def load_testdata(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES):
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}
